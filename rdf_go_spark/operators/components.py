@@ -16,7 +16,7 @@ the same edges — a fully independent formulation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # One representative iteration's physical plan per iterative operator,
@@ -46,7 +46,11 @@ def connected_components(edges: DataFrame, src: str = "src",
     already sees old and new label side by side, so a changed flag rides
     through an ``observe()`` aggregate and the eager localCheckpoint that
     materializes the round doubles as the action that collects it — one
-    job per round, not update + compare (the round-3 finding)."""
+    job per round, not update + compare (the round-3 finding).
+
+    Labels travel one hop per round, so a component of diameter d needs
+    d + 1 rounds; raises RuntimeError if ``max_iter`` rounds pass
+    without a round that changes nothing."""
     from pyspark.sql import Observation
 
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -73,11 +77,12 @@ def connected_components(edges: DataFrame, src: str = "src",
         updated = (updated.observe(obs, F.sum("_changed").alias("changed"))
                    .drop("_changed"))
         _capture_iteration_plan("connected_components", i, updated)
-        updated = updated.localCheckpoint()
-        labels = updated
+        labels = updated.localCheckpoint()
         if not obs.get["changed"]:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge within "
+        f"max_iter={max_iter} rounds")
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:
@@ -105,27 +110,43 @@ def transitive_closure_pairs(edges: DataFrame, src: str = "src",
                               max_iter=max_iter, with_distance=False)
 
 
+def _private_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` for planning and running an iterative loop:
+    a clone, so it carries every SQL conf, temp view and UDF of the
+    caller, with adaptive execution and columnar cache compression off.
+    The SparkContext and CacheManager are shared, so a cache built here
+    serves the caller; the caller's own conf is never written."""
+    child = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
+    return child
+
+
+def _in_session(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a DataFrame of ``session``."""
+    jds = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jds, session)
+
+
 def transitive_closure(edges: DataFrame, src: str = "src",
                        dst: str = "dst", max_iter: int = 32,
                        with_distance: bool = True) -> DataFrame:
     """Directed transitive closure with shortest hop distance — the
     relational property-path ``pred+`` operator: (src, dst, dist) for
     every reachable pair. Path-doubling iteration (paths ∘ paths, min
-    merge, localCheckpoint lineage truncation): O(log diameter) rounds
-    — and driver round-trips — instead of O(diameter); per-round cost is
-    a closure self-join, which beats edge-at-a-time for long thin graphs
-    and is bounded by the final closure size either way. Cycles are
-    safe: a pair's shortest-hop distance is present from the round the
-    pair first appears (both halves of the shortest path exist
-    inductively), so the count fixpoint is also the distance fixpoint.
+    merge): O(log diameter) rounds — and driver round-trips — instead
+    of O(diameter); per-round cost is a closure self-join, which beats
+    edge-at-a-time for long thin graphs and is bounded by the final
+    closure size either way. Cycles are safe: a pair's shortest-hop
+    distance is present from the round the pair first appears (both
+    halves of the shortest path exist inductively), so the count
+    fixpoint is also the distance fixpoint. Raises RuntimeError if
+    ``max_iter`` rounds pass without reaching it.
 
     ``with_distance=False`` drops the dist column and merges with a
     plain DISTINCT (set semantics — see transitive_closure_pairs).
-
-    Round caches are built once and dropped next round, so columnar
-    cache COMPRESSION is pure overhead for them — it is disabled for
-    the duration of the loop and restored after (r6, measured ~1 s at
-    sf1; representation-only, no semantic effect).
 
     Rounds persist src-partitioned CACHED DataFrames instead of
     localCheckpoints: an InMemoryRelation PRESERVES its output
@@ -134,69 +155,74 @@ def transitive_closure(edges: DataFrame, src: str = "src",
     groupBy clustering (src ⊆ {src, dst}) are satisfied for free —
     two exchanges per round instead of three, and the fixpoint count()
     doubles as the cache-materializing action (measured ~35% faster at
-    sf0.1; BENCH/BASELINE.md §6)."""
-    spark = edges.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    _COMPRESS = "spark.sql.inMemoryColumnarStorage.compressed"
-    prev_compress = spark.conf.get(_COMPRESS, "true")
+    sf0.1; BENCH/BASELINE.md §6).
 
-    def _round(paths, n, i, with_dist):
-        if with_dist:
-            comp = (paths.alias("a").join(
-                        paths.alias("b"),
-                        F.col("a.dst") == F.col("b.src"))
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.dst").alias("dst"),
-                            (F.col("a.dist") + F.col("b.dist"))
-                            .alias("dist")))
-            merged = (paths.unionByName(comp)
-                      .repartition(nparts, "src")
-                      .groupBy("src", "dst").agg(F.min("dist")
-                                                 .alias("dist")))
+    The loop is planned and run in a private child session
+    (_private_session) with adaptive execution off. Each round is a
+    cache built on the previous round's cache; under AQE a cached
+    round holds its predecessor's adaptive plan (final AND initial)
+    three times over, so the nested plan grew ~6x per round (round 4:
+    157 k plan lines, 9.3 k InMemoryTableScans) and AQE re-walked it
+    after every stage: round times 0.42 → 2.73 s at flat rows, and a
+    driver OutOfMemoryError on a 64-node chain (7 rounds), where the
+    plan string outgrew the heap. Non-adaptive rounds run in a flat
+    0.47–0.58 s, and the cached round reports hashpartitioning(src),
+    which is what makes the rounds partition-preserving. Round caches
+    are read once, so the child also stores them uncompressed. Measured
+    warm on 4 CPUs over 2,000 chains, every 33rd of them long: 16-turn
+    tails (22.8 k pairs) 7.1–7.3 s → 2.7–3.8 s; 32-turn tails (45.7 k
+    pairs) 21.8–23.5 s → 3.5–4.6 s.
+    Rejected: an eager localCheckpoint per round (loses the
+    partitioning, one more job per round, no CPU gain) and switching
+    AQE off on the caller's session (a session-global race)."""
+    caller = edges.sparkSession
+    spark = _private_session(caller)
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    name = ("transitive_closure" if with_distance
+            else "transitive_closure_pairs")
+
+    def _round(paths, i):
+        cols = [F.col("a.src").alias("src"), F.col("b.dst").alias("dst")]
+        if with_distance:
+            cols.append((F.col("a.dist") + F.col("b.dist")).alias("dist"))
+        comp = (paths.alias("a")
+                .join(paths.alias("b"), F.col("a.dst") == F.col("b.src"))
+                .select(*cols))
+        merged = paths.unionByName(comp).repartition(nparts, "src")
+        if with_distance:
+            merged = merged.groupBy("src", "dst").agg(
+                F.min("dist").alias("dist"))
         else:
-            comp = (paths.alias("a").join(
-                        paths.alias("b"),
-                        F.col("a.dst") == F.col("b.src"))
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.dst").alias("dst")))
-            merged = (paths.unionByName(comp)
-                      .repartition(nparts, "src").distinct())
-        name = ("transitive_closure" if with_dist
-                else "transitive_closure_pairs")
+            merged = merged.distinct()
         _capture_iteration_plan(name, i, merged)
         merged = merged.persist()
-        m = merged.count()
-        return merged, m
+        return merged, merged.count()
 
     # truncate the upstream lineage ONCE (the input may be a heavy
     # extraction pipeline — without this, every round's cached plan
-    # embeds it and driver-side planning swamps the saved exchange),
-    # then cache rounds with persist() so partitioning survives.
-    # eager=False (r6): the checkpoint materializes INSIDE the first
-    # paths job instead of as its own full pass over the edges.
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # embeds it), then cache rounds with persist() so partitioning
+    # survives. eager=False: the checkpoint materializes INSIDE the
+    # first paths job instead of as its own full pass over the edges.
+    e = (_in_session(edges, spark)
+         .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .localCheckpoint(eager=False))
     if with_distance:
         e = e.withColumn("dist", F.lit(1))
-    spark.conf.set(_COMPRESS, "false")  # round caches: see docstring
-    try:
-        paths = (e.repartition(nparts, "src")
-                 .dropDuplicates(["src", "dst"]).persist())
-        n = paths.count()
-        # path doubling: composing paths with paths covers depth 2^k
-        # after k rounds — O(log diameter) iterations (and driver
-        # round-trips) instead of O(diameter); per-round cost is a
-        # closure self-join, bounded by the final closure size either way
-        for i in range(max_iter):
-            merged, m = _round(paths, n, i, with_distance)
-            if m == n:
-                merged.unpersist(False)
-                break
-            paths.unpersist(False)
-            paths, n = merged, m
-    finally:
-        spark.conf.set(_COMPRESS, prev_compress)
-    return paths
+    paths = (e.repartition(nparts, "src")
+             .dropDuplicates(["src", "dst"]).persist())
+    n = paths.count()
+    # path doubling: composing paths with paths covers depth 2^k after
+    # k rounds
+    for i in range(max_iter):
+        merged, m = _round(paths, i)
+        if m == n:
+            merged.unpersist(False)
+            return _in_session(paths, caller)
+        paths.unpersist(False)
+        paths, n = merged, m
+    paths.unpersist(False)
+    raise RuntimeError(
+        f"{name} did not converge within max_iter={max_iter} rounds")
 
 
 def transitive_closure_oracle(edges_sql: str) -> str:

@@ -15,6 +15,7 @@ from rdf_go_spark.encoders import encode_nquads, encode_ntriples
 from rdf_go_spark.parsers.ntriples import (
     parse_document, parse_nquads_line, parse_ntriples_line,
 )
+from tests.w3c_harness import fixture_ids
 
 W3C = "/root/reference/w3c-tests"
 
@@ -27,9 +28,10 @@ c14n_pairs = [
 ]
 
 
-@pytest.mark.skipif(not nt_files, reason="W3C fixtures unavailable")
+@pytest.mark.skipif(not nt_files, reason="rdf-tests unavailable")
 class TestW3CNTriples:
-    @pytest.mark.parametrize("path", nt_files, ids=os.path.basename)
+    @pytest.mark.parametrize("path", nt_files,
+                             ids=fixture_ids(os.path.basename))
     def test_syntax(self, path):
         src = open(path, encoding="utf-8").read()
         stmts, errs = parse_document(src)
@@ -39,16 +41,17 @@ class TestW3CNTriples:
             assert not errs, f"positive case failed: {errs[0]}"
 
     @pytest.mark.parametrize("inp,exp", c14n_pairs,
-                             ids=lambda p: os.path.basename(p))
+                             ids=fixture_ids(os.path.basename))
     def test_c14n_byte_parity(self, inp, exp):
         stmts, errs = parse_document(open(inp, encoding="utf-8").read())
         assert not errs
         assert encode_ntriples(stmts) == open(exp, encoding="utf-8").read()
 
 
-@pytest.mark.skipif(not nq_files, reason="W3C fixtures unavailable")
+@pytest.mark.skipif(not nq_files, reason="rdf-tests unavailable")
 class TestW3CNQuads:
-    @pytest.mark.parametrize("path", nq_files, ids=os.path.basename)
+    @pytest.mark.parametrize("path", nq_files,
+                             ids=fixture_ids(os.path.basename))
     def test_syntax(self, path):
         src = open(path, encoding="utf-8").read()
         stmts, errs = parse_document(src, quads=True)
@@ -104,9 +107,9 @@ nq_c14n_pairs = [
 ]
 
 
-@pytest.mark.skipif(not nq_c14n_pairs, reason="W3C fixtures unavailable")
+@pytest.mark.skipif(not nq_c14n_pairs, reason="rdf-tests unavailable")
 @pytest.mark.parametrize("inp,exp", nq_c14n_pairs,
-                         ids=lambda p: os.path.basename(p))
+                         ids=fixture_ids(os.path.basename))
 def test_nq_c14n_byte_parity(inp, exp):
     stmts, errs = parse_document(
         open(inp, encoding="utf-8", newline="").read(), quads=True)

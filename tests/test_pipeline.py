@@ -183,3 +183,65 @@ class TestTransitiveClosure:
             (5, 6): 1, (5, 7): 2, (6, 7): 1,
         }
         assert got == expected
+
+    @pytest.mark.parametrize("with_distance", [True, False])
+    def test_long_chain_matches_oracle(self, spark, with_distance):
+        """A 64-node chain takes 7 path-doubling rounds (six to cover 63
+        hops, one that adds nothing); every pair, and with distance its
+        shortest hop count, matches the recursive-CTE twin."""
+        from rdf_go_spark.operators.components import (
+            transitive_closure, transitive_closure_oracle,
+        )
+        edges = [(i, i + 1) for i in range(63)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = sorted(tuple(r) for r in transitive_closure(
+            df, with_distance=with_distance).collect())
+        values = ", ".join(f"({a}, {b})" for a, b in edges)
+        want = duckdb.sql(transitive_closure_oracle(
+            f"SELECT * FROM (VALUES {values}) t(src, dst)")).fetchall()
+        if not with_distance:
+            want = [(s, d) for s, d, _ in want]
+        assert len(got) == 63 * 64 // 2
+        assert got == sorted(want)
+
+    def test_raises_at_iteration_cap(self, spark):
+        from rdf_go_spark.operators.components import transitive_closure
+        df = spark.createDataFrame([(i, i + 1) for i in range(63)],
+                                   "src long, dst long")
+        with pytest.raises(RuntimeError, match="max_iter=3"):
+            transitive_closure(df, max_iter=3)
+
+    def test_caller_conf_never_written(self, spark):
+        """The round loop runs in a private child session, so the
+        caller's adaptive and cache-compression confs read the same
+        before, during and after closures — here two at once on other
+        threads while this thread reads the conf."""
+        import threading
+        import time
+        from rdf_go_spark.operators.components import transitive_closure
+        keys = ("spark.sql.adaptive.enabled",
+                "spark.sql.inMemoryColumnarStorage.compressed")
+        before = {k: spark.conf.get(k) for k in keys}
+        df = spark.createDataFrame([(i, i + 1) for i in range(15)],
+                                   "src long, dst long")
+        counts, errors = [], []
+
+        def run():
+            try:
+                counts.append(transitive_closure(df).count())
+            except Exception as exc:  # surfaced by the assert below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=run) for _ in range(2)]
+        for t in threads:
+            t.start()
+        seen = []
+        while any(t.is_alive() for t in threads):
+            seen.append({k: spark.conf.get(k) for k in keys})
+            time.sleep(0.01)
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        assert counts == [15 * 16 // 2] * 2
+        assert seen and all(s == before for s in seen)
+        assert {k: spark.conf.get(k) for k in keys} == before

@@ -13,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 from rdf_go_spark.parsers.turtle import parse_turtle
 from rdf_go_spark.rdfc10 import canonicalize
 from rdf_go_spark.terms import BlankNode, IRI, Literal, Quad
+from tests.w3c_harness import fixture_ids
 
 
 def _permute_labels(quads, seed):
@@ -88,8 +89,9 @@ w3c_bnode_ttls = [p for p in sorted(
     if "bad" not in os.path.basename(p)][:60]
 
 
-@pytest.mark.skipif(not w3c_bnode_ttls, reason="fixtures unavailable")
-@pytest.mark.parametrize("path", w3c_bnode_ttls, ids=os.path.basename)
+@pytest.mark.skipif(not w3c_bnode_ttls, reason="rdf-tests unavailable")
+@pytest.mark.parametrize("path", w3c_bnode_ttls,
+                         ids=fixture_ids(os.path.basename))
 def test_w3c_permutation_invariance(path):
     src = open(path, encoding="utf-8", newline="").read()
     g, errs = parse_turtle(src, base="http://example/base/")

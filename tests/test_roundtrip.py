@@ -18,6 +18,7 @@ from rdf_go_spark.parsers.rdfxml import parse_rdfxml
 from rdf_go_spark.parsers.trig import parse_trig
 from rdf_go_spark.parsers.turtle import parse_turtle
 from rdf_go_spark.terms import IRI, BlankNode, Literal, Quad, TripleTerm
+from tests.w3c_harness import fixture_ids
 
 SAMPLE = [
     Quad(IRI("http://e/s"), IRI("http://e/p"), IRI("http://e/o")),
@@ -101,8 +102,9 @@ w3c_eval_ttls = sorted(
     glob.glob("/root/reference/w3c-tests/turtle/eval/*.ttl"))[:30]
 
 
-@pytest.mark.skipif(not w3c_eval_ttls, reason="fixtures unavailable")
-@pytest.mark.parametrize("path", w3c_eval_ttls, ids=os.path.basename)
+@pytest.mark.skipif(not w3c_eval_ttls, reason="rdf-tests unavailable")
+@pytest.mark.parametrize("path", w3c_eval_ttls,
+                         ids=fixture_ids(os.path.basename))
 def test_w3c_graph_survives_all_formats(path):
     """Parse a W3C turtle graph, push it through every encoder/decoder
     pair, assert isomorphism is preserved (quoted-triple graphs are

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from rdf_go_spark.operators.query import bgp_match, bgp_sql
 
@@ -150,6 +150,9 @@ def path_exprs(draw, depth=2):
 
 @settings(max_examples=15, deadline=None)
 @given(edges=EDGES, expr=path_exprs())
+# an alternation that repeats an IRI keeps one row per branch (bag)
+@example(edges=[("<s0>", "<p0>", "<s1>"), ("<s1>", "<p1>", "<s2>"),
+                ("<s2>", "<p0>", '"a"')], expr="(<p0>)|(<p0>)")
 def test_random_path_matches_sql_twin(spark, edges, expr):
     from rdf_go_spark.operators.paths import (
         graph_nodes, has_zero_length, path_pairs, path_sql,

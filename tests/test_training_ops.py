@@ -466,6 +466,20 @@ class TestPlanShape:
         expected = {n: find(n) for n in parent}
         assert got == expected
 
+    def test_connected_components_raises_at_iteration_cap(self, spark):
+        """Labels travel one hop per round, so a 60-node path needs 60
+        rounds: at the default cap of 25 the operator must raise rather
+        than return a partial labelling (it used to return 35
+        components); with room to converge it is one component."""
+        from rdf_go_spark.operators.components import connected_components
+        df = spark.createDataFrame([(i, i + 1) for i in range(59)],
+                                   "src long, dst long")
+        with pytest.raises(RuntimeError, match="max_iter=25"):
+            connected_components(df)
+        comp = connected_components(df, max_iter=64)
+        assert comp.count() == 60
+        assert comp.select("component").distinct().count() == 1
+
     def test_iteration_plans_captured_for_audit(self, spark):
         """The iterative operators record round-0's executed plan (their
         returned frames are localCheckpoint scans that hide it) — the plan
@@ -483,6 +497,10 @@ class TestPlanShape:
             assert "BroadcastNestedLoopJoin" not in plan
             assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
                     or "BroadcastHashJoin" in plan), name
+        # closure rounds are planned in a non-adaptive child session:
+        # under AQE each round's cache nests every earlier round's plan
+        assert ("AdaptiveSparkPlan"
+                not in components.LAST_ITERATION_PLANS["transitive_closure"])
 
     @pytest.mark.parametrize("op", [
         "token_stats", "bpe_token_stats", "lang_id", "fingerprint",

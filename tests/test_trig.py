@@ -5,7 +5,9 @@ import os
 import pytest
 
 from rdf_go_spark.parsers.trig import parse_trig
-from tests.w3c_harness import check_case, collect, is_legacy
+from tests.w3c_harness import (
+    W3C, check_case, collect, fixture_ids, is_legacy,
+)
 
 CASES = (collect("trig", ".trig") + collect("trig/eval", ".trig")
          + collect("trig/syntax", ".trig"))
@@ -20,9 +22,9 @@ def _parse_cg(src, base):
     return parse_trig(src, base=base, star_semantics="cg")
 
 
-@pytest.mark.skipif(not CASES, reason="W3C fixtures unavailable")
-@pytest.mark.parametrize("path", CASES, ids=lambda p: os.path.relpath(
-    p, "/root/reference/w3c-tests"))
+@pytest.mark.skipif(not CASES, reason="rdf-tests unavailable")
+@pytest.mark.parametrize("path", CASES, ids=fixture_ids(
+    lambda p: os.path.relpath(p, W3C)))
 def test_w3c_trig(path):
     parse = _parse_cg if is_legacy(os.path.basename(path)) else _parse
     failure = check_case(path, parse, expected_ext=".nq", expected_quads=True)

@@ -6,7 +6,9 @@ import os
 import pytest
 
 from rdf_go_spark.parsers.turtle import parse_turtle
-from tests.w3c_harness import check_case, collect, is_legacy
+from tests.w3c_harness import (
+    W3C, check_case, collect, fixture_ids, is_legacy,
+)
 
 CASES = (collect("turtle", ".ttl") + collect("turtle/eval", ".ttl")
          + collect("turtle/syntax", ".ttl"))
@@ -22,9 +24,9 @@ def _parse_cg(src, base):
     return parse_turtle(src, base=base, star_semantics="cg")
 
 
-@pytest.mark.skipif(not CASES, reason="W3C fixtures unavailable")
-@pytest.mark.parametrize("path", CASES, ids=lambda p: os.path.relpath(
-    p, "/root/reference/w3c-tests"))
+@pytest.mark.skipif(not CASES, reason="rdf-tests unavailable")
+@pytest.mark.parametrize("path", CASES, ids=fixture_ids(
+    lambda p: os.path.relpath(p, W3C)))
 def test_w3c_turtle(path):
     parse = _parse_cg if is_legacy(os.path.basename(path)) else _parse
     failure = check_case(path, parse)
