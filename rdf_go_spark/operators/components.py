@@ -16,6 +16,8 @@ the same edges — a fully independent formulation.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -130,6 +132,23 @@ def _in_session(df: DataFrame, session: SparkSession) -> DataFrame:
     return DataFrame(jds, session)
 
 
+def _round_width(rows: int, row_bytes: float, advisory: int,
+                 floor: int, cap: int) -> int:
+    """Shuffle width of a closure round over ``rows`` paths of
+    ``row_bytes`` each: about ``advisory`` bytes per partition, never
+    fewer than ``floor`` partitions nor more than ``cap``. Monotone in
+    ``rows``, so the width only grows as the closure does."""
+    return min(cap, max(floor, math.ceil(rows * row_bytes / advisory)))
+
+
+def _cached_bytes(df: DataFrame) -> int:
+    """In-memory size of ``df``'s materialized cache, as loaded."""
+    cached = (df.sparkSession._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(df._jdf).get())
+    return cached.cachedRepresentation().cacheBuilder() \
+        .sizeInBytesStats().value()
+
+
 def transitive_closure(edges: DataFrame, src: str = "src",
                        dst: str = "dst", max_iter: int = 32,
                        with_distance: bool = True) -> DataFrame:
@@ -174,21 +193,46 @@ def transitive_closure(edges: DataFrame, src: str = "src",
     pairs) 21.8–23.5 s → 3.5–4.6 s.
     Rejected: an eager localCheckpoint per round (loses the
     partitioning, one more job per round, no CPU gain) and switching
-    AQE off on the caller's session (a session-global race)."""
+    AQE off on the caller's session (a session-global race).
+
+    Without AQE nothing coalesces a shuffle, so every stage of every
+    round runs exactly as many tasks as its width; a width pinned at
+    spark.sql.shuffle.partitions spent most of a small closure's CPU
+    on per-task overhead. The width is therefore sized from the data
+    (_round_width): the seed is spread over ``floor`` =
+    min(cap, defaultParallelism) partitions, and each round over
+    enough partitions to hold its rows at
+    spark.sql.adaptive.advisoryPartitionSizeInBytes apiece, between
+    ``floor`` and ``cap`` = spark.sql.shuffle.partitions. Row counts
+    are the exact per-round fixpoint counts; the row size is measured
+    once, on the loaded seed cache. Closure rows only grow, so the
+    width only grows. Measured warm on 4 CPUs at 32 shuffle partitions
+    (a 27.6 k-pair closure, 5 rounds): a property-path call ran 411 →
+    75 tasks, and the closure's task CPU fell 3.2 → 1.2 s.
+    Rejected: re-reading each round cache's Catalyst stats (right after
+    the round's count() they still hold the plan estimate, so round 1
+    got the cap, and the width changes added an exchange per round:
+    slower than a constant width), and a fixed defaultParallelism
+    (the same here, but not sized to the data: a large closure would
+    get oversized partitions)."""
     caller = edges.sparkSession
     spark = _private_session(caller)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    floor = min(cap, spark.sparkContext.defaultParallelism)
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     name = ("transitive_closure" if with_distance
             else "transitive_closure_pairs")
 
-    def _round(paths, i):
+    def _round(paths, i, width):
         cols = [F.col("a.src").alias("src"), F.col("b.dst").alias("dst")]
         if with_distance:
             cols.append((F.col("a.dist") + F.col("b.dist")).alias("dist"))
         comp = (paths.alias("a")
                 .join(paths.alias("b"), F.col("a.dst") == F.col("b.src"))
                 .select(*cols))
-        merged = paths.unionByName(comp).repartition(nparts, "src")
+        merged = paths.unionByName(comp).repartition(width, "src")
         if with_distance:
             merged = merged.groupBy("src", "dst").agg(
                 F.min("dist").alias("dist"))
@@ -208,13 +252,15 @@ def transitive_closure(edges: DataFrame, src: str = "src",
          .localCheckpoint(eager=False))
     if with_distance:
         e = e.withColumn("dist", F.lit(1))
-    paths = (e.repartition(nparts, "src")
+    paths = (e.repartition(floor, "src")
              .dropDuplicates(["src", "dst"]).persist())
     n = paths.count()
+    row_bytes = _cached_bytes(paths) / max(n, 1)
     # path doubling: composing paths with paths covers depth 2^k after
     # k rounds
     for i in range(max_iter):
-        merged, m = _round(paths, i)
+        width = _round_width(n, row_bytes, advisory, floor, cap)
+        merged, m = _round(paths, i, width)
         if m == n:
             merged.unpersist(False)
             return _in_session(paths, caller)

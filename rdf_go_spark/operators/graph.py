@@ -353,8 +353,11 @@ def two_hop_census(spark: SparkSession, by_subj: str, by_obj: str) -> DataFrame:
     the (obj, pred) clustering — no exchange), the degree join runs
     bucket-co-located, and only the tiny (pred1, pred2) rollup shuffles.
     ``n_src`` distinct-counts sources through a distinct-first semi-join,
-    again linear in |E|. Semantics identical to counting two_hop_edges
-    (the DuckDB oracle states it as the join)."""
+    again linear in |E|; its inputs are re-spread on mid, an exchange
+    Spark drops only when spark.sql.shuffle.partitions equals the bucket
+    count, and that adaptive execution otherwise coalesces by size.
+    Semantics identical to counting two_hop_edges (the DuckDB oracle
+    states it as the join)."""
     e1 = spark.table(by_obj).filter(~F.col("obj_is_literal"))
     e2 = spark.table(by_subj)
     in_deg = (e1.groupBy(F.col("obj").alias("mid"),
@@ -369,22 +372,20 @@ def two_hop_census(spark: SparkSession, by_subj: str, by_obj: str) -> DataFrame:
                   F.count_distinct("mid").alias("n_mid")))
     # distinct sources per (pred1, pred2): dedupe BEFORE the join so hot
     # mids cannot multiply rows. This branch ends in a GLOBAL shuffle
-    # (the (pred1, pred2, src) distinct) regardless of bucketing, so
-    # re-spreading its inputs over the full shuffle parallelism costs
-    # two narrow exchanges and lifts the n_buckets-task cap off the
-    # heaviest aggregate (r6: the bench graph has 8 buckets on a
-    # 32-core session; width derives from shuffle.partitions, never a
-    # constant). The degree/paths half above keeps its zero-exchange
-    # bucket co-location.
-    nparts = int(e1.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+    # (the (pred1, pred2, src) distinct) regardless of bucketing, so its
+    # inputs are re-spread on mid to lift the n_buckets-task cap off the
+    # heaviest aggregate (r6: 8 buckets on a 32-core session). No
+    # explicit count: adaptive execution never coalesces a
+    # repartition(n, col) (a 14-row census ran 92 tasks at 32
+    # partitions, 30 once coalescible). The degree/paths half above
+    # keeps its zero-exchange bucket co-location.
     src1 = (e1.select(F.col("subj").alias("src"),
                       F.col("pred").alias("pred1"),
                       F.col("obj").alias("mid"))
-            .repartition(nparts, "mid").distinct())
+            .repartition("mid").distinct())
     mid_p2 = (e2.select(F.col("subj").alias("mid"),
                         F.col("pred").alias("pred2"))
-              .repartition(nparts, "mid").distinct())
+              .repartition("mid").distinct())
     n_src = (src1.join(mid_p2, "mid")
              .select("pred1", "pred2", "src").distinct()
              .groupBy("pred1", "pred2")

@@ -305,24 +305,6 @@ def _rep_expand(ast: Ast) -> Ast:
     return out
 
 
-def _alt_iri_leaves(ast: Ast) -> Union[List[str], None]:
-    """IRIs of an alternation tree whose leaves are ALL plain ``iri``
-    nodes, else None. When those IRIs are distinct, such an alternation
-    is a single pred-IN filter: a triple matches exactly one predicate,
-    so the union of the per-IRI scans and the IN-filtered scan contain
-    the same rows with the same (bag) cardinality — one table scan
-    instead of N (r6; Spark side only, the SQL twin keeps its UNION ALL
-    text verbatim). A repeated IRI (``p|p``) yields each triple once
-    per occurrence, which the IN filter would collapse."""
-    if ast[0] == "iri":
-        return [ast[1]]
-    if ast[0] == "alt":
-        a = _alt_iri_leaves(ast[1])
-        b = _alt_iri_leaves(ast[2])
-        return a + b if a is not None and b is not None else None
-    return None
-
-
 def _compile_df(ast: Ast, base: DataFrame) -> DataFrame:
     kind = ast[0]
     if kind == "distinct":
@@ -352,11 +334,6 @@ def _compile_df(ast: Ast, base: DataFrame) -> DataFrame:
                 .select(F.col("a.src").alias("src"),
                         F.col("b.dst").alias("dst")))
     if kind == "alt":
-        iris = _alt_iri_leaves(ast)
-        if iris is not None and len(set(iris)) == len(iris):
-            return (base.filter(F.col("pred").isin(iris))
-                    .select(F.col("subj").alias("src"),
-                            F.col("obj").alias("dst")))
         return _compile_df(ast[1], base).unionByName(
             _compile_df(ast[2], base))
     if kind == "plus":

@@ -215,6 +215,36 @@ class TestBucketedJoins:
             for t in ("graph_census_test_by_subj", "graph_census_test_by_obj"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
 
+    def test_two_hop_census_respread_is_coalescible(self, spark, triples):
+        """With fewer buckets (4) than shuffle partitions (8) the census
+        re-spreads its n_src inputs on mid; that exchange must be a
+        by-column repartition adaptive execution can coalesce, never a
+        fixed-count one, and the census must still equal counting the
+        materialized two-hop paths per (pred1, pred2)."""
+        from rdf_go_spark.operators.graph import (
+            materialize_adjacency, two_hop_census, two_hop_edges,
+        )
+        by_subj, by_obj = materialize_adjacency(
+            triples, "graph_census4_test", n_buckets=4)
+        try:
+            df = two_hop_census(spark, by_subj, by_obj)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "REPARTITION_BY_NUM" not in plan, plan
+            assert "REPARTITION_BY_COL" in plan, plan
+            want = (two_hop_edges(spark, by_subj, by_obj)
+                    .groupBy("pred1", "pred2")
+                    .agg(F.count("*").alias("n_paths"),
+                         F.count_distinct("mid").alias("n_mid"),
+                         F.count_distinct("src").alias("n_src")))
+            cols = ["pred1", "pred2", "n_paths", "n_mid", "n_src"]
+            got = sorted(map(tuple, df.select(cols).collect()))
+            assert got == sorted(map(tuple, want.select(cols).collect()))
+            assert got
+        finally:
+            for t in ("graph_census4_test_by_subj",
+                      "graph_census4_test_by_obj"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
 
 class TestIncrementalUpdate:
     """incremental_update: checksum-diff maintenance — only partitions

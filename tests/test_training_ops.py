@@ -502,6 +502,41 @@ class TestPlanShape:
         assert ("AdaptiveSparkPlan"
                 not in components.LAST_ITERATION_PLANS["transitive_closure"])
 
+    def test_closure_round_width_rule(self):
+        """A closure round's shuffle width holds its rows at the advisory
+        partition size, clamped to [floor, cap]: small closures get the
+        floor, not spark.sql.shuffle.partitions, and the width grows
+        with the rows until it reaches the cap."""
+        from rdf_go_spark.operators.components import _round_width
+        mb = 1 << 20
+        assert _round_width(0, 0.0, 64 * mb, 4, 32) == 4
+        assert _round_width(27_600, 46.0, 64 * mb, 4, 32) == 4
+        assert _round_width(10_000_000, 46.0, 64 * mb, 4, 32) == 7
+        assert _round_width(10**12, 46.0, 64 * mb, 4, 32) == 32
+        # the floor never exceeds the cap
+        assert _round_width(10, 46.0, 64 * mb, 2, 2) == 2
+        widths = [_round_width(r, 46.0, 64 * mb, 4, 32)
+                  for r in (10**k for k in range(3, 12))]
+        assert widths == sorted(widths)
+        assert widths[0] == 4 and widths[-1] == 32
+
+    def test_closure_rounds_sized_from_data(self, spark):
+        """Closure rounds run without adaptive execution, so nothing
+        coalesces their shuffles: a tiny closure must shuffle at the
+        floor width (defaultParallelism = 4 here), not at the session's
+        8 shuffle partitions."""
+        import re
+
+        from rdf_go_spark.operators import components
+        components.LAST_ITERATION_PLANS.clear()
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(16)], "src long, dst long")
+        assert components.transitive_closure_pairs(edges).count() == 136
+        plan = components.LAST_ITERATION_PLANS["transitive_closure_pairs"]
+        widths = set(re.findall(
+            r"hashpartitioning\((?:src|dst)#\d+L?, (\d+)\)", plan))
+        assert widths == {"4"}, plan
+
     @pytest.mark.parametrize("op", [
         "token_stats", "bpe_token_stats", "lang_id", "fingerprint",
         "rolling_fingerprint"])
